@@ -7,6 +7,9 @@ Formula (Robertson/Okapi, the one mandated by the build target):
                   idf(t) * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
 
 with k1 = 1.2, b = 0.75. Query terms are de-duplicated (set semantics).
+The idf has three forms that must stay in step: ``bm25_idf`` (Python
+float, the driver-side form every index query path uses), ``idf_col``
+(Spark Column) and ``idf_sql`` (SQL text for the oracles).
 Total order for top-k: (score desc, doc_id asc) — the reference's
 ``ORDER BY similarity DESC`` (smse_backend/services/search.py:107) is not a
 total order; rank-identity vs any oracle requires the doc_id tie-break.
@@ -14,10 +17,16 @@ total order; rank-identity vs any oracle requires the doc_id tie-break.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from smse_backend_spark import B, K1
+
+
+def bm25_idf(n_docs: float, df: float) -> float:
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
 def idf_col(df_count: Column, n_docs: Column | float) -> Column:

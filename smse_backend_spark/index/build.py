@@ -49,10 +49,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from smse_backend_spark.functions.tokenizer import (
-    TERM_COUNTS_LANG_SCHEMA,
-    term_counts_map_in_pandas,
-)
 from smse_backend_spark.index import lineage as lin
 from smse_backend_spark.index.codec import delta_encode, encode_blocks
 
@@ -95,7 +91,8 @@ _EMPTY_BLOCKS = {
 
 def _block_layout(codes: np.ndarray, seg: np.ndarray, doc: np.ndarray,
                   block_size: int):
-    """Shared numpy core: order (term-code, segment, doc) and cut blocks.
+    """Numpy core of the block kernel: order (term-code, segment, doc) and
+    cut blocks.
 
     Returns ``(order, boundary arrays...)`` where ``order`` is the
     permutation to apply to every parallel input array. Blocks are keyed by
@@ -195,109 +192,6 @@ def make_block_builder(block_size: int, with_positions: bool = False):
     return build_blocks
 
 
-def make_block_builder_arrow(block_size: int, with_positions: bool = False):
-    """``applyInArrow`` twin of :func:`make_block_builder` — identical output
-    rows, zero pandas.
-
-    The pandas kernel's two hot spots at 10^7-pair groups are artifacts of
-    the pandas bridge, not of the algorithm: (1) the Arrow→pandas
-    conversion materializes every term as a Python ``str`` object, and
-    (2) ``sort_values`` orders the group by comparing those strings.
-    Arrow-side, terms never leave C++ memory: ``dictionary_encode`` yields
-    int32 codes and the group is ordered by an integer ``np.lexsort`` on
-    (code, doc_id). Code order ≠ lexicographic term order, but postings
-    only need to be doc-ascending WITHIN a term (the delta/varint codec's
-    invariant); the writer re-sorts block rows globally by
-    ``(term, segment, block_no)`` afterwards, so sorting terms
-    lexicographically inside the kernel would be wasted work.
-
-    Assumes ``lang``/``term_bucket`` are group-constant — true at both
-    call sites, which group by (lang, term_bucket, segment-range);
-    ``segment`` varies within a group and is cut by :func:`_block_layout`.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    fields = [
-        ("lang", pa.string()), ("term_bucket", pa.int32()),
-        ("segment", pa.int64()), ("term", pa.string()),
-        ("block_no", pa.int32()), ("n", pa.int32()),
-        ("first_doc", pa.int64()), ("last_doc", pa.int64()),
-        ("block_max_tf", pa.int32()), ("block_min_dl", pa.int32()),
-        ("block_sum_tf", pa.int64()),
-        ("gaps", pa.binary()), ("tfs", pa.binary()), ("dls", pa.binary()),
-    ]
-    if with_positions:
-        fields.append(("poss", pa.binary()))
-    out_schema = pa.schema(fields)
-
-    def build_blocks(tbl: "pa.Table") -> "pa.Table":
-        if tbl.num_rows == 0:
-            return pa.table(
-                {f.name: pa.array([], type=f.type) for f in out_schema}
-            )
-        t = tbl.combine_chunks()
-        d = t.column("term").chunk(0).dictionary_encode()
-        order, codes, seg, doc, block_no, bstarts, counts, bends = _block_layout(
-            d.indices.to_numpy(zero_copy_only=False).astype(np.int64),
-            t.column("segment").chunk(0).to_numpy(zero_copy_only=False),
-            t.column("doc_id").chunk(0).to_numpy(zero_copy_only=False),
-            block_size,
-        )
-        tf = t.column("tf").chunk(0).to_numpy(zero_copy_only=False)[order]
-        dl = t.column("doc_len").chunk(0).to_numpy(zero_copy_only=False)[order]
-        tf = tf.astype(np.int64, copy=False)
-        dl = dl.astype(np.int64, copy=False)
-        nb = int(bstarts.size)
-
-        gaps = delta_encode(doc, bstarts)
-        cols = {
-            "lang": pa.repeat(t.column("lang").chunk(0)[0], nb),
-            "term_bucket": pa.repeat(t.column("term_bucket").chunk(0)[0], nb),
-            "segment": pa.array(seg[bstarts].astype(np.int64)),
-            "term": pc.take(d.dictionary, pa.array(codes[bstarts])),
-            "block_no": pa.array(block_no[bstarts].astype(np.int32)),
-            "n": pa.array(counts.astype(np.int32)),
-            "first_doc": pa.array(doc[bstarts]),
-            "last_doc": pa.array(doc[bends]),
-            "block_max_tf": pa.array(
-                np.maximum.reduceat(tf, bstarts).astype(np.int32)
-            ),
-            "block_min_dl": pa.array(
-                np.minimum.reduceat(dl, bstarts).astype(np.int32)
-            ),
-            "block_sum_tf": pa.array(np.add.reduceat(tf, bstarts)),
-            "gaps": pa.array(
-                encode_blocks(gaps.astype(np.uint64), counts), type=pa.binary()
-            ),
-            "tfs": pa.array(
-                encode_blocks(tf.astype(np.uint64), counts), type=pa.binary()
-            ),
-            "dls": pa.array(
-                encode_blocks(dl.astype(np.uint64), counts), type=pa.binary()
-            ),
-        }
-        if with_positions:
-            pos_sorted = pc.take(t.column("positions").chunk(0), pa.array(order))
-            flat = pos_sorted.flatten().to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            post_starts = np.concatenate(([0], np.cumsum(tf[:-1]))).astype(
-                np.int64
-            )
-            dp = flat.copy()
-            if dp.size:
-                dp[1:] -= flat[:-1]
-                dp[post_starts] = flat[post_starts]
-            cols["poss"] = pa.array(
-                encode_blocks(dp.astype(np.uint64), np.add.reduceat(tf, bstarts)),
-                type=pa.binary(),
-            )
-        return pa.table(cols, schema=out_schema)
-
-    return build_blocks
-
-
 def block_builder_seg_range(n_segments: int, n_buckets: int,
                             parallelism: int) -> int:
     """Segments per kernel group. Per-group plumbing (Arrow framing, worker
@@ -313,25 +207,14 @@ def block_builder_seg_range(n_segments: int, n_buckets: int,
 def apply_block_builder(tc: DataFrame, block_size: int, with_positions: bool,
                         out_schema: str, seg_range: int = 1) -> DataFrame:
     """Group (doc, term) pairs at (lang, term_bucket, segment-range)
-    granularity and run the block-encode kernel.
-
-    pandas plumbing by default: although the Arrow kernel is ~1.8× faster
-    in isolation (no object-string materialization), ``applyInArrow``'s
-    serialization path measured ~2× slower than ``applyInPandas`` on the
-    same grouped input in this Spark build (identity kernels: 22.1 s vs
-    10.9 s over 34.9M pairs), and it stays slower at any group
-    granularity — so the pandas bridge wins end-to-end (12.8 s vs 27 s
-    full build). ``SMSE_BLOCK_KERNEL=arrow`` selects the byte-identical
-    Arrow twin for when that plumbing gap closes."""
+    granularity and run the block-encode kernel through ``applyInPandas``
+    (an ``applyInArrow`` twin measured ~2x slower end-to-end in this Spark
+    build: its serialization path costs more than the pandas bridge
+    saves)."""
     tc = tc.withColumn(
         "seg_range", (F.col("segment") / max(1, seg_range)).cast("long")
     )
-    grouped = tc.groupBy("lang", "term_bucket", "seg_range")
-    if os.environ.get("SMSE_BLOCK_KERNEL", "pandas") == "arrow":
-        return grouped.applyInArrow(
-            make_block_builder_arrow(block_size, with_positions), out_schema
-        )
-    return grouped.applyInPandas(
+    return tc.groupBy("lang", "term_bucket", "seg_range").applyInPandas(
         make_block_builder(block_size, with_positions), out_schema
     )
 
@@ -580,31 +463,14 @@ def _build_batch(
         # stems the token array pre-sort so collisions merge for free).
         # Row-equal to the Arrow kernels (lockstep-tested) but with no
         # Python workers, no Arrow transfer, and no GIL in the widest
-        # stage of the build. Set SMSE_TOKENIZE_IMPL=pandas to fall back
-        # to the Arrow kernels.
-        from smse_backend_spark.functions.tokenizer import (
-            stemmed_term_counts_map_in_pandas,
-            term_counts_df,
-        )
+        # stage of the build.
+        from smse_backend_spark.functions.tokenizer import term_counts_df
 
         out_schema = BLOCKS_SCHEMA
-        # the synonym analyzer has no Arrow kernel — its fold is a pure
-        # map literal, so the JVM path is used regardless of the knob
-        if (os.environ.get("SMSE_TOKENIZE_IMPL", "column") == "pandas"
-                and analyzer != "synonym"):
-            kernel = (
-                stemmed_term_counts_map_in_pandas
-                if analyzer == "stem"
-                else term_counts_map_in_pandas
-            )
-            tc = part.select("doc_id", "content", "lang").mapInPandas(
-                kernel, TERM_COUNTS_LANG_SCHEMA
-            )
-        else:
-            tc = term_counts_df(
-                part.select("doc_id", "content", "lang"), analyzer=analyzer,
-                synonyms=synonyms,
-            )
+        tc = term_counts_df(
+            part.select("doc_id", "content", "lang"), analyzer=analyzer,
+            synonyms=synonyms,
+        )
     tc = (
         tc
         .withColumn("segment", (F.col("doc_id") / segment_size).cast("long"))

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smse_backend_spark import B, DEFAULT_TOP_K, K1
+from smse_backend_spark.functions.bm25 import bm25_idf
 from smse_backend_spark.index import lineage as lin
 from smse_backend_spark.index.codec import decode_blocks, delta_decode
 from smse_backend_spark.index.deletes import live_mask
@@ -831,8 +832,8 @@ class InvertedIndex:
                     "extend) to enable time travel"
                 )
             self._as_of_rows = rows
-        self._dict_cache: dict[tuple[str, str], int] | None = None
-        self._cf_cache: dict[tuple[str, str], int] | None = None
+        # lang -> term -> (df, cf); the None key holds the cross-lang sums
+        self._dict_cache: dict[str | None, dict[str, tuple[int, int]]] | None = None
         self._tomb_loaded = False
         self._tomb_bcast = None  # sc.broadcast of the sorted id array
         self._tomb_df: DataFrame | None = None  # join fallback (big sets)
@@ -916,86 +917,70 @@ class InvertedIndex:
             n, sdl = st["n_docs"], st["sum_dl"]
         return float(n), (sdl / n if n else 0.0)
 
-    def _ensure_dict_cache(self) -> None:
+    def _cached_dict(self, lang: str | None) -> dict[str, tuple[int, int]] | None:
+        """term -> (df, cf) of ``lang`` (summed over langs for None) from
+        the driver dictionary cache, loaded on first use; None when the
+        vocabulary is too big to cache and callers must read the
+        dictionary parquet instead."""
+        if self.meta.get("n_terms", 1 << 62) > self.DICT_CACHE_MAX_TERMS:
+            return None
         if self._dict_cache is None:
-            rows = self.spark.read.parquet(f"{self.path}/dictionary").collect()
-            self._dict_cache = {(r["lang"], r["term"]): r["df"] for r in rows}
-            self._cf_cache = {(r["lang"], r["term"]): r["cf"] for r in rows}
+            cache: dict[str | None, dict[str, tuple[int, int]]] = {}
+            for r in self.spark.read.parquet(f"{self.path}/dictionary").collect():
+                cache.setdefault(r["lang"], {})[r["term"]] = (r["df"], r["cf"])
+            totals: dict[str, tuple[int, int]] = {}
+            for per_term in cache.values():
+                for t, (df, cf) in per_term.items():
+                    tdf, tcf = totals.get(t, (0, 0))
+                    totals[t] = (tdf + df, tcf + cf)
+            cache[None] = totals
+            self._dict_cache = cache
+        return self._dict_cache.get(lang, {})
+
+    def _term_stats(self, terms: list[str], lang: str | None, stat: str) -> dict[str, int]:
+        """Per-term ``stat`` ("df" or "cf") of the terms present — the one
+        place the source is chosen: under time travel, summed from the
+        pruned blocks' metadata (one posting per (doc, term), so df = sum
+        of block counts and cf = sum of ``block_sum_tf``; the dictionary
+        is as-of-latest); else the driver cache when the vocabulary fits;
+        else a pruned dictionary read."""
+        if self.as_of is not None:
+            block_col = {"df": "n", "cf": "block_sum_tf"}[stat]
+            rows = (
+                self._blocks(terms, lang)
+                .groupBy("term").agg(F.sum(block_col).alias(stat)).collect()
+            )
+            return {r["term"]: int(r[stat]) for r in rows}
+        cached = self._cached_dict(lang)
+        if cached is not None:
+            i = ("df", "cf").index(stat)
+            return {t: cached[t][i] for t in terms if t in cached}
+        d = self.spark.read.parquet(f"{self.path}/dictionary").filter(
+            F.col("term").isin(terms)
+        )
+        if lang is not None:
+            d = d.filter(F.col("lang") == lang)
+        rows = d.groupBy("term").agg(F.sum(stat).alias(stat)).collect()
+        return {r["term"]: int(r[stat]) for r in rows}
 
     def term_df(self, terms: list[str], lang: str | None = None) -> dict[str, int]:
-        if self.as_of is not None:
-            # historical df from the pruned blocks' metadata columns (one
-            # posting per (doc, term) => df = sum of block counts); the
-            # same partition-pruned files the query decodes anyway
-            return {
-                r["term"]: int(r["df"])
-                for r in self._blocks(terms, lang)
-                .groupBy("term").agg(F.sum("n").alias("df")).collect()
-            }
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            if lang is None:
-                out: dict[str, int] = {}
-                for (_lg, t), df in self._dict_cache.items():
-                    if t in terms:
-                        out[t] = out.get(t, 0) + df
-                return out
-            return {
-                t: self._dict_cache[(lang, t)]
-                for t in terms
-                if (lang, t) in self._dict_cache
-            }
-        d = self.spark.read.parquet(f"{self.path}/dictionary").filter(
-            F.col("term").isin(terms)
-        )
-        if lang is not None:
-            d = d.filter(F.col("lang") == lang)
-        return {
-            r["term"]: r["df"]
-            for r in d.groupBy("term").agg(F.sum("df").alias("df")).collect()
-        }
-
-    def term_idf(self, terms: list[str], lang: str | None = None) -> dict[str, float]:
-        """idf per term from the dictionary (driver cache or pruned read)."""
-        n, _ = self.corpus_stats(lang)
-        return {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in self.term_df(terms, lang).items()
-        }
+        """Document frequency per present term."""
+        return self._term_stats(terms, lang, "df")
 
     def term_cf(self, terms: list[str], lang: str | None = None) -> dict[str, int]:
-        """Collection frequency (total occurrences) per term — the
-        dictionary's ``cf`` column (driver cache or pruned read); under
-        time travel, summed from the pruned blocks' ``block_sum_tf``."""
-        if self.as_of is not None:
-            return {
-                r["term"]: int(r["cf"])
-                for r in self._blocks(terms, lang)
-                .groupBy("term").agg(F.sum("block_sum_tf").alias("cf"))
-                .collect()
-            }
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            if lang is None:
-                out: dict[str, int] = {}
-                for (_lg, t), cf in self._cf_cache.items():
-                    if t in terms:
-                        out[t] = out.get(t, 0) + cf
-                return out
-            return {
-                t: self._cf_cache[(lang, t)]
-                for t in terms
-                if (lang, t) in self._cf_cache
-            }
-        d = self.spark.read.parquet(f"{self.path}/dictionary").filter(
-            F.col("term").isin(terms)
-        )
-        if lang is not None:
-            d = d.filter(F.col("lang") == lang)
-        return {
-            r["term"]: int(r["cf"])
-            for r in d.groupBy("term").agg(F.sum("cf").alias("cf")).collect()
-        }
+        """Collection frequency (total occurrences) per present term."""
+        return self._term_stats(terms, lang, "cf")
+
+    def _bm25_stats(
+        self, terms: list[str], lang: str | None
+    ) -> tuple[float, float, dict[str, int], dict[str, float]]:
+        """(n, avgdl, df, idf) for scoring ``terms``; df/idf cover the
+        present terms only and are empty — no lookup made — when there
+        are no terms or no docs. ``term_df`` is looked up on the handle so
+        a wrapper installed there sees every scoring lookup."""
+        n, avgdl = self.corpus_stats(lang)
+        dfs = self.term_df(terms, lang) if terms and n else {}
+        return n, avgdl, dfs, {t: bm25_idf(n, df) for t, df in dfs.items()}
 
     def _sum_dl(self, lang: str | None = None) -> int:
         """Exact total token count of the (possibly lang-restricted,
@@ -1142,12 +1127,7 @@ class InvertedIndex:
             tree = map_terms(tree, lambda t: self.synonyms.get(t, t))
         terms = sorted(all_terms(tree))
         pos = sorted(positive_terms(tree))
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        _, avgdl, _, idf = self._bm25_stats(terms, lang)
         if not idf:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         decoded = self._decoded(self._blocks(sorted(idf), lang))
@@ -1186,12 +1166,7 @@ class InvertedIndex:
         FILTER context: candidates restricted, stats corpus-wide. The
         filter runs inside the decode pipeline, before any aggregation."""
         terms = self._analyze(query_text)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        _, avgdl, _, idf = self._bm25_stats(terms, lang)
         if not idf:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         blocks = self._blocks(sorted(idf), lang)
@@ -1231,13 +1206,12 @@ class InvertedIndex:
                 "prefix expansion uses the as-of-latest dictionary — "
                 "time-travel prefix queries are not supported"
             )
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            agg: dict[str, int] = {}
-            for (lg, t), df in self._dict_cache.items():
-                if (lang is None or lg == lang) and t.startswith(prefix):
-                    agg[t] = agg.get(t, 0) + df
-            ranked = sorted(agg.items(), key=lambda kv: (-kv[1], kv[0]))
+        cached = self._cached_dict(lang)
+        if cached is not None:
+            ranked = sorted(
+                ((t, df) for t, (df, _cf) in cached.items() if t.startswith(prefix)),
+                key=lambda kv: (-kv[1], kv[0]),
+            )
             return [t for t, _df in ranked[:max_expansions]]
         d = self.spark.read.parquet(f"{self.path}/dictionary").filter(
             F.col("term").startswith(prefix)
@@ -1297,13 +1271,12 @@ class InvertedIndex:
             raise ValueError(f"fuzzy expansion takes exactly one term, got {toks!r}")
         q = toks[0]
         within = _damerau_within if transpositions else _levenshtein_within
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            agg: dict[str, int] = {}
-            for (lg, t), df in self._dict_cache.items():
-                if (lang is None or lg == lang) and within(q, t, max_edits):
-                    agg[t] = agg.get(t, 0) + df
-            ranked = sorted(agg.items(), key=lambda kv: (-kv[1], kv[0]))
+        cached = self._cached_dict(lang)
+        if cached is not None:
+            ranked = sorted(
+                ((t, df) for t, (df, _cf) in cached.items() if within(q, t, max_edits)),
+                key=lambda kv: (-kv[1], kv[0]),
+            )
             return [t for t, _df in ranked[:max_expansions]]
         d = self.spark.read.parquet(f"{self.path}/dictionary")
         if transpositions:
@@ -1411,13 +1384,12 @@ class InvertedIndex:
         import re as _re
 
         rx = _re.compile(pattern)
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            agg: dict[str, int] = {}
-            for (lg, t), df in self._dict_cache.items():
-                if (lang is None or lg == lang) and rx.fullmatch(t):
-                    agg[t] = agg.get(t, 0) + df
-            ranked = sorted(agg.items(), key=lambda kv: (-kv[1], kv[0]))
+        cached = self._cached_dict(lang)
+        if cached is not None:
+            ranked = sorted(
+                ((t, df) for t, (df, _cf) in cached.items() if rx.fullmatch(t)),
+                key=lambda kv: (-kv[1], kv[0]),
+            )
             return [t for t, _df in ranked[:max_expansions]]
         d = self.spark.read.parquet(f"{self.path}/dictionary").filter(
             F.col("term").rlike(f"^(?:{pattern})$")
@@ -1537,7 +1509,7 @@ class InvertedIndex:
         df_sf = matches.count()
         if df_sf == 0:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_sf + 0.5) / (df_sf + 0.5))
+        idf = bm25_idf(n, df_sf)
         scored = matches.select(
             "doc_id",
             F.round(
@@ -1599,7 +1571,7 @@ class InvertedIndex:
         df_sm = matches.count()
         if df_sm == 0:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_sm + 0.5) / (df_sm + 0.5))
+        idf = bm25_idf(n, df_sm)
         scored = matches.select(
             "doc_id",
             F.round(
@@ -1668,7 +1640,7 @@ class InvertedIndex:
         df_sn = matches.count()
         if df_sn == 0:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_sn + 0.5) / (df_sn + 0.5))
+        idf = bm25_idf(n, df_sn)
         scored = matches.select(
             "doc_id",
             F.round(
@@ -1714,7 +1686,7 @@ class InvertedIndex:
         df_or = matches.count()
         if df_or == 0:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_or + 0.5) / (df_or + 0.5))
+        idf = bm25_idf(n, df_or)
         scored = matches.select(
             "doc_id",
             F.round(
@@ -1745,18 +1717,13 @@ class InvertedIndex:
         match set (small by construction — rare terms), left-semi joined
         onto the full OR scoring frame before the top-k cut."""
         terms = self._analyze(query_text)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
+        n, avgdl, dfs, idf = self._bm25_stats(terms, lang)
         if not dfs:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         rare = sorted(
             t for t, df in dfs.items()
             if float(df) / float(n) <= float(cutoff_freq)
         )
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
         if rare:
             req = (
@@ -1832,7 +1799,7 @@ class InvertedIndex:
         df_sp = matches.count()
         if df_sp == 0:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_sp + 0.5) / (df_sp + 0.5))
+        idf = bm25_idf(n, df_sp)
         scored = matches.select(
             "doc_id",
             F.round(
@@ -1949,7 +1916,7 @@ class InvertedIndex:
                 c = F.when(tf > 0, F.lit(1.0)).otherwise(F.lit(0.0))
             else:
                 df_i = float(stats[f"df{i}"] or 0)
-                idf = math.log(1.0 + (n - df_i + 0.5) / (df_i + 0.5))
+                idf = bm25_idf(n, df_i)
                 c = F.when(
                     tf > 0, F.lit(idf) * _tf_norm(tf, dl, avgdl)
                 ).otherwise(F.lit(0.0))
@@ -2126,7 +2093,7 @@ class InvertedIndex:
             if _is_scored(leaf):
                 tf = F.col(f"tf{i}")
                 df_i = float(stats[f"df{i}"] or 0)
-                idf = math.log(1.0 + (n - df_i + 0.5) / (df_i + 0.5))
+                idf = bm25_idf(n, df_i)
                 c = F.when(
                     tf > 0,
                     F.lit(leaf.boost) * (F.lit(idf) * _tf_norm(tf, dl, avgdl)),
@@ -2402,12 +2369,7 @@ class InvertedIndex:
         m = len(terms) if min_match is None else min_match
         if m <= 1:
             return self._topk_for_terms(terms, k, lang, "auto")
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        _, avgdl, _, idf = self._bm25_stats(terms, lang)
         if len(idf) < m:  # fewer terms exist than the constraint demands
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         blocks = self._blocks(sorted(idf), lang)
@@ -2417,17 +2379,9 @@ class InvertedIndex:
             .filter(F.col("nt") >= m)
             .select("segment")
         )
-        blocks = blocks.join(qual, "segment", "left_semi")
-        idf_df = F.broadcast(
-            self.spark.createDataFrame(list(idf.items()), "term string, idf double")
-        )
-        decoded = self._live(
-            blocks.select("term", "first_doc", "gaps", "tfs", "dls")
-            .repartition(self.spark.sparkContext.defaultParallelism)
-            .mapInPandas(_decode_map, DECODED_SCHEMA)
-        )
+        decoded = self._decoded(blocks.join(qual, "segment", "left_semi"))
         scored = (
-            decoded.join(idf_df, "term")
+            decoded.join(self._idf_df(idf), "term")
             .withColumn(
                 "contrib", F.col("idf") * _tf_norm(F.col("tf"), F.col("dl"), avgdl)
             )
@@ -2454,12 +2408,8 @@ class InvertedIndex:
         for raw, w in boosts.items():
             for t in self._analyze(raw):
                 per_term[t] = float(w)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(sorted(per_term), lang) if per_term and n else {}
-        scaled = {
-            t: per_term[t] * math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        _, avgdl, _, idf = self._bm25_stats(sorted(per_term), lang)
+        scaled = {t: per_term[t] * w for t, w in idf.items()}
         if not scaled:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(scaled), lang), scaled, avgdl)
@@ -2491,27 +2441,20 @@ class InvertedIndex:
         flat = [t for g in norm for t in g]
         if len(flat) != len(set(flat)):
             raise ValueError(f"synonym groups must be disjoint, got {norm!r}")
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(sorted(flat), lang) if flat and n else {}
+        n, avgdl, dfs, _ = self._bm25_stats(sorted(flat), lang)
         rows = []  # (term, gid, group idf)
         for gi, g in enumerate(norm):
             present = [t for t in g if t in dfs]
             if not present:
                 continue
-            dfmax = max(dfs[t] for t in present)
-            gidf = math.log(1.0 + (n - dfmax + 0.5) / (dfmax + 0.5))
+            gidf = bm25_idf(n, max(dfs[t] for t in present))
             rows.extend((t, gi, gidf) for t in present)
         if not rows:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         gmap = F.broadcast(
             self.spark.createDataFrame(rows, "term string, gid int, idf double")
         )
-        blocks = self._blocks(sorted(r[0] for r in rows), lang)
-        decoded = self._live(
-            blocks.select("term", "first_doc", "gaps", "tfs", "dls")
-            .repartition(self.spark.sparkContext.defaultParallelism)
-            .mapInPandas(_decode_map, DECODED_SCHEMA)
-        )
+        decoded = self._decoded(self._blocks(sorted(r[0] for r in rows), lang))
         scored = (
             decoded.join(gmap, "term")
             .groupBy("doc_id", "gid")
@@ -2544,12 +2487,7 @@ class InvertedIndex:
         anti-joined BEFORE the top-k cut."""
         terms = self._analyze(query_text)
         ex_terms = sorted({t for raw in must_not for t in self._analyze(raw)})
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        _, avgdl, _, idf = self._bm25_stats(terms, lang)
         if not idf:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
@@ -2607,12 +2545,7 @@ class InvertedIndex:
         scores round in one discipline."""
         terms = self._analyze(query_text)
         neg_terms = sorted({t for raw in negative for t in self._analyze(raw)})
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        _, avgdl, _, idf = self._bm25_stats(terms, lang)
         if not idf:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
@@ -2694,7 +2627,7 @@ class InvertedIndex:
         df_p = matches.count()
         if df_p == 0:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_p + 0.5) / (df_p + 0.5))
+        idf = bm25_idf(n, df_p)
         return matches.select(
             "doc_id",
             F.round(
@@ -2767,7 +2700,7 @@ class InvertedIndex:
         # writes the same left-associated chain — bit-identical)
         idf_sum = 0.0
         for t in terms:
-            idf_sum += math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5))
+            idf_sum += bm25_idf(n, dfs[t])
         nparts = int(
             min(1024, max(self.spark.sparkContext.defaultParallelism,
                           sum(dfs.values()) // 200_000 + 1))
@@ -2842,7 +2775,7 @@ class InvertedIndex:
         df_p = agg.count()
         if df_p == 0:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_p + 0.5) / (df_p + 0.5))
+        idf = bm25_idf(n, df_p)
         return (
             agg.select(
                 "doc_id",
@@ -2948,16 +2881,9 @@ class InvertedIndex:
         terms = sorted(set(seq))
         if not terms:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        n, avgdl = self.corpus_stats(lang)
-        if not n:
+        _, avgdl, dfs, idf = self._bm25_stats(terms, lang)
+        if any(t not in dfs for t in terms):  # also true when no docs
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        dfs = self.term_df(terms, lang)
-        if any(t not in dfs for t in terms):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
         nparts = int(
             min(1024, max(self.spark.sparkContext.defaultParallelism,
                           sum(dfs.values()) // 200_000 + 1))
@@ -3042,10 +2968,7 @@ class InvertedIndex:
         if any(not s for s in srcs):
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         terms = sorted({t for s in srcs for t in s})
-        idf = {
-            t: math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5))
-            for t in terms
-        }
+        idf = {t: bm25_idf(n, dfs[t]) for t in terms}
         window = int(max_gaps) + len(srcs) - 1
         nparts = int(
             min(1024, max(self.spark.sparkContext.defaultParallelism,
@@ -3110,10 +3033,7 @@ class InvertedIndex:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         live_f = tuple(t for t in fterms if t in dfs)
         terms = sorted({t for s in srcs for t in s})
-        idf = {
-            t: math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5))
-            for t in terms
-        }
+        idf = {t: bm25_idf(n, dfs[t]) for t in terms}
         window = int(max_gaps) + len(srcs) - 1
         read = sorted(set(terms) | set(live_f))
         nparts = int(
@@ -3204,25 +3124,12 @@ class InvertedIndex:
         k-row top-k frame broadcasts back onto the contribution rows, so
         explaining costs one extra broadcast join over scoring."""
         terms = self._analyze(query_text)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        _, avgdl, _, idf = self._bm25_stats(terms, lang)
         empty = "doc_id long, term string, tf long, idf double, contrib double, score double"
         if not idf:
             return self.spark.createDataFrame([], empty)
-        idf_df = F.broadcast(
-            self.spark.createDataFrame(list(idf.items()), "term string, idf double")
-        )
-        decoded = self._live(
-            self._blocks(sorted(idf), lang)
-            .select("term", "first_doc", "gaps", "tfs", "dls")
-            .repartition(self.spark.sparkContext.defaultParallelism)
-            .mapInPandas(_decode_map, DECODED_SCHEMA)
-        )
-        contribs = decoded.join(idf_df, "term").withColumn(
+        decoded = self._decoded(self._blocks(sorted(idf), lang))
+        contribs = decoded.join(self._idf_df(idf), "term").withColumn(
             "contrib", F.col("idf") * _tf_norm(F.col("tf"), F.col("dl"), avgdl)
         )
         totals = contribs.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
@@ -3378,12 +3285,7 @@ class InvertedIndex:
         ``operators.search.bm25_scored_scan`` (sans nmatch). Cost is the
         matched postings of the query's terms; the corpus is never read."""
         terms = self._analyze(query_text)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        _, avgdl, _, idf = self._bm25_stats(terms, lang)
         if not idf:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
@@ -4794,10 +4696,7 @@ class InvertedIndex:
             gdf[gid] = max(gdf.get(gid, 0), df)
         if not gdf:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        gidf = {
-            gid: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for gid, df in gdf.items()
-        }
+        gidf = {gid: bm25_idf(n, df) for gid, df in gdf.items()}
         live = sorted(t for t in terms if t in dfs)
         gmap = F.broadcast(
             self.spark.createDataFrame(
@@ -5029,7 +4928,7 @@ class InvertedIndex:
                 tf_of.pop(t, None)
             if not tf_of:
                 return self.spark.createDataFrame([], RESULT_SCHEMA)
-        idf = self.term_idf(sorted(tf_of), lang)
+        _, avgdl, _, idf = self._bm25_stats(sorted(tf_of), lang)
         weights = {
             t: math.floor(tf_of[t] * w * 1e6 + 0.5) / 1e6
             for t, w in idf.items()
@@ -5038,7 +4937,6 @@ class InvertedIndex:
         sel = sorted(t for t, _w in chosen[:max_terms])
         if not sel:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        _, avgdl = self.corpus_stats(lang)
         sel_idf = {t: idf[t] for t in sel}
         scored = self._score(
             self._blocks(sel, lang), sel_idf, avgdl
@@ -5073,17 +4971,13 @@ class InvertedIndex:
             raise ValueError(f"suggest takes exactly one term, got {toks!r}")
         q = toks[0]
         out_schema = "term string, df long, dist int"
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            agg: dict[str, int] = {}
-            for (lg, t), df in self._dict_cache.items():
-                if lang is None or lg == lang:
-                    agg[t] = agg.get(t, 0) + df
-            df_in = agg.get(q, 0)
+        cached = self._cached_dict(lang)
+        if cached is not None:
+            df_in = cached.get(q, (0, 0))[0]
             if mode == "missing" and df_in > 0:
                 return self.spark.createDataFrame([], out_schema)
             rows = []
-            for t, df in agg.items():
+            for t, (df, _cf) in cached.items():
                 if mode == "popular" and df <= df_in:
                     continue
                 dist = _levenshtein_band(q, t, max_edits)
@@ -5129,13 +5023,12 @@ class InvertedIndex:
                 f"prefix must be a single analyzed token, got {prefix!r}"
             )
         out_schema = "term string, cf long"
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            agg: dict[str, int] = {}
-            for (lg, t), cf in self._cf_cache.items():
-                if (lang is None or lg == lang) and t.startswith(prefix):
-                    agg[t] = agg.get(t, 0) + int(cf)
-            rows = sorted(agg.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
+        cached = self._cached_dict(lang)
+        if cached is not None:
+            rows = sorted(
+                ((t, cf) for t, (_df, cf) in cached.items() if t.startswith(prefix)),
+                key=lambda kv: (-kv[1], kv[0]),
+            )[:n]
             return self.spark.createDataFrame(rows, out_schema)
         d = self.spark.read.parquet(f"{self.path}/dictionary").filter(
             F.col("term").startswith(prefix)
@@ -5181,14 +5074,12 @@ class InvertedIndex:
         lengths = list(range(max(1, L - f), L + f + 1))
         head = prefix[:pl]
         out_schema = "term string, dist long, cf long"
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            agg: dict[str, int] = {}
-            for (lg, t), cf in self._cf_cache.items():
-                if (lang is None or lg == lang) and t[:pl] == head:
-                    agg[t] = agg.get(t, 0) + int(cf)
+        cached = self._cached_dict(lang)
+        if cached is not None:
             rows = []
-            for t, cf in agg.items():
+            for t, (_df, cf) in cached.items():
+                if t[:pl] != head:
+                    continue
                 best = f + 1
                 for Lp in lengths:
                     if Lp > len(t):
@@ -5244,14 +5135,10 @@ class InvertedIndex:
         n, _ = self.corpus_stats(lang)
         cut = int(math.ceil(float(max_doc_frac) * n))
         out_schema = "term string, df long"
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            agg: dict[str, int] = {}
-            for (lg, t), df in self._dict_cache.items():
-                if lang is None or lg == lang:
-                    agg[t] = agg.get(t, 0) + int(df)
+        cached = self._cached_dict(lang)
+        if cached is not None:
             rows = sorted(
-                ((t, df) for t, df in agg.items() if df <= cut),
+                ((t, df) for t, (df, _cf) in cached.items() if df <= cut),
                 key=lambda kv: (kv[1], kv[0]),
             )[:k]
             return self.spark.createDataFrame(rows, out_schema)
@@ -5431,12 +5318,7 @@ class InvertedIndex:
         lang: str | None,
         mode: str,
     ) -> DataFrame:
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        _, avgdl, dfs, idf = self._bm25_stats(terms, lang)
         if not idf:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         if mode == "auto":
@@ -5490,9 +5372,8 @@ class InvertedIndex:
         """
         from pyspark.sql import Window
 
-        n, avgdl = self.corpus_stats(lang)
         all_terms = sorted({t for q in queries.values() for t in self._analyze(q)})
-        idf = self.term_idf(all_terms, lang) if all_terms and n else {}
+        _, avgdl, _, idf = self._bm25_stats(all_terms, lang)
         if not idf:
             return self.spark.createDataFrame(
                 [], "query_id long, rank int, doc_id long, score double"
@@ -5574,9 +5455,7 @@ class InvertedIndex:
     def _pruned_topk(
         self, blocks: DataFrame, idf: dict[str, float], avgdl: float, k: int
     ) -> DataFrame:
-        idf_df = F.broadcast(
-            self.spark.createDataFrame(list(idf.items()), "term string, idf double")
-        )
+        idf_df = self._idf_df(idf)
         # metadata-only pass: per-segment upper bound. Tombstoned docs still
         # count into the bound (a bound over a superset stays sound; the
         # live filter happens inside _score before any top-k). Only the small stat
@@ -5644,12 +5523,7 @@ def fielded_indexed_topk(
         terms = idx._analyze(query_text)  # each field's own analyzer
         if not terms:
             continue
-        n, avgdl = idx.corpus_stats(None)
-        dfs = idx.term_df(terms, None) if n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        _, avgdl, _, idf = idx._bm25_stats(terms, None)
         if not idf:
             continue
         scored = idx._score(idx._blocks(sorted(idf), None), idf, avgdl)
@@ -5728,10 +5602,7 @@ def combined_fields_indexed_topk(
             df_max[t] = max(df_max.get(t, 0), int(d))
     if not df_max:
         return empty
-    idf = {
-        t: math.log(1.0 + (n - d + 0.5) / (d + 0.5))
-        for t, d in df_max.items()
-    }
+    idf = {t: bm25_idf(n, d) for t, d in df_max.items()}
     parts = []
     for f in fields:
         present = sorted(dfs_per_field[f])
@@ -5790,6 +5661,30 @@ def combined_fields_indexed_topk(
     )
 
 
+def _merged_shard_stats(
+    shards: list[InvertedIndex], terms: list[str], lang: str | None
+) -> tuple[float, dict[str, float]]:
+    """(avgdl, idf) of the shards taken as one corpus — the exact integer
+    merge of each shard's commit-time ``n_docs``/``sum_dl`` and per-term
+    df (metadata and dictionaries only, no posting blob read)."""
+    if lang is None:
+        n = float(sum(s.meta["n_docs"] for s in shards))
+        sdl = float(sum(s.meta["sum_dl"] for s in shards))
+    else:
+        sts = [
+            s.meta["per_lang"].get(lang, {"n_docs": 0, "sum_dl": 0})
+            for s in shards
+        ]
+        n = float(sum(st["n_docs"] for st in sts))
+        sdl = float(sum(st["sum_dl"] for st in sts))
+    dfs: dict[str, int] = {}
+    if terms and n:
+        for s in shards:
+            for t, d in s.term_df(terms, lang).items():
+                dfs[t] = dfs.get(t, 0) + int(d)
+    return (sdl / n if n else 0.0), {t: bm25_idf(n, df) for t, df in dfs.items()}
+
+
 def sharded_bm25_topk(
     spark: SparkSession,
     paths: list[str],
@@ -5826,28 +5721,7 @@ def sharded_bm25_topk(
     analyzers = {s.analyzer for s in shards}
     if len(analyzers) != 1:
         raise ValueError(f"shards disagree on analyzer: {sorted(analyzers)}")
-    terms = shards[0]._analyze(query_text)
-    # exact integer stat merge from each shard's commit-time metadata
-    if lang is None:
-        n = float(sum(s.meta["n_docs"] for s in shards))
-        sdl = float(sum(s.meta["sum_dl"] for s in shards))
-    else:
-        sts = [
-            s.meta["per_lang"].get(lang, {"n_docs": 0, "sum_dl": 0})
-            for s in shards
-        ]
-        n = float(sum(st["n_docs"] for st in sts))
-        sdl = float(sum(st["sum_dl"] for st in sts))
-    avgdl = sdl / n if n else 0.0
-    dfs: dict[str, int] = {}
-    if terms and n:
-        for s in shards:
-            for t, d in s.term_df(terms, lang).items():
-                dfs[t] = dfs.get(t, 0) + int(d)
-    idf = {
-        t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        for t, df in dfs.items()
-    }
+    avgdl, idf = _merged_shard_stats(shards, shards[0]._analyze(query_text), lang)
     if not idf:
         return spark.createDataFrame([], RESULT_SCHEMA)
     parts = [
@@ -5913,27 +5787,7 @@ def routed_bm25_topk(
     if len(analyzers) != 1:
         raise ValueError(f"shards disagree on analyzer: {sorted(analyzers)}")
     owner = shards[route_shard(routing, len(paths))]
-    terms = owner._analyze(query_text)
-    if lang is None:
-        n = float(sum(s.meta["n_docs"] for s in shards))
-        sdl = float(sum(s.meta["sum_dl"] for s in shards))
-    else:
-        sts = [
-            s.meta["per_lang"].get(lang, {"n_docs": 0, "sum_dl": 0})
-            for s in shards
-        ]
-        n = float(sum(st["n_docs"] for st in sts))
-        sdl = float(sum(st["sum_dl"] for st in sts))
-    avgdl = sdl / n if n else 0.0
-    dfs: dict[str, int] = {}
-    if terms and n:
-        for s in shards:
-            for t, d in s.term_df(terms, lang).items():
-                dfs[t] = dfs.get(t, 0) + int(d)
-    idf = {
-        t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        for t, df in dfs.items()
-    }
+    avgdl, idf = _merged_shard_stats(shards, owner._analyze(query_text), lang)
     if not idf:
         return spark.createDataFrame([], RESULT_SCHEMA)
     scored = owner._score(owner._blocks(sorted(idf), lang), idf, avgdl)

@@ -305,6 +305,45 @@ def test_time_travel_as_of_batch(spark, corpus, index):
         InvertedIndex(spark, index.path, as_of_batch=9)
 
 
+def test_term_stats_sources_agree(spark, tmp_path):
+    """term_df / term_cf answer identically from all three sources — the
+    driver dictionary cache, the pruned dictionary parquet read (forced
+    by lifting n_terms over the cache cap) and the as-of block metadata
+    at the last batch — for lang=None (summed over langs) and per lang,
+    on multi-lang, single-lang and absent terms."""
+    docs = [
+        (0, "merge join hash", "en"), (1, "merge sort", "en"),
+        (2, "merge tabelle", "de"), (3, "tabelle tabelle zeile", "de"),
+        (4, "join ligne ligne", "fr"), (5, "hash hash", "en"),
+    ]
+    corpus = spark.createDataFrame(docs, "doc_id long, content string, lang string")
+    out = str(tmp_path / "stats_idx")
+    build_index(spark, corpus, out, segment_size=2, n_buckets=2,
+                block_size=4, n_batches=2, known_max_doc=5)
+    dict_rows = spark.read.parquet(f"{out}/dictionary").collect()
+    terms = ["merge", "join", "tabelle", "hash", "nonexistentterm"]
+
+    cached = InvertedIndex(spark, out)
+    assert cached.meta["n_terms"] <= cached.DICT_CACHE_MAX_TERMS
+    scanned = InvertedIndex(spark, out)
+    scanned.meta["n_terms"] = scanned.DICT_CACHE_MAX_TERMS + 1
+    last = max(r["batch_id"] for r in lin.read_lineage(out))
+    as_of = InvertedIndex(spark, out, as_of_batch=last)
+
+    assert cached.term_df(terms) == {"merge": 3, "join": 2, "tabelle": 2, "hash": 2}
+    assert cached.term_cf(["tabelle", "hash"], "de") == {"tabelle": 3}
+    for lang in (None, "en", "de", "fr"):
+        for stat in ("df", "cf"):
+            want: dict[str, int] = {}
+            for r in dict_rows:
+                if r["term"] in terms and lang in (None, r["lang"]):
+                    want[r["term"]] = want.get(r["term"], 0) + r[stat]
+            for ix in (cached, scanned, as_of):
+                got = getattr(ix, f"term_{stat}")(terms, lang)
+                assert got == want, (stat, lang, ix.as_of, got, want)
+    assert cached._dict_cache is not None and scanned._dict_cache is None
+
+
 def test_prefix_search_vs_oracle(spark, index, sf_smoke):
     """bm25_topk_prefix == DuckDB oracle (expansion ranked df desc/term asc,
     capped, then OR-scored with per-term idf)."""
@@ -957,31 +996,6 @@ def test_stemmed_index_rank_identity(spark, sf_smoke):
              for r in idx.bm25_topk_batch({0: q}, 10).collect()]
     single = [(r["doc_id"], r["score"]) for r in idx.bm25_topk(q, 10).collect()]
     assert batch == single
-
-
-def test_arrow_block_kernel_builds_identical_index(spark, corpus, tmp_path):
-    """SMSE_BLOCK_KERNEL=arrow (applyInArrow twin) must produce a
-    row-identical index to the default pandas kernel — plain AND
-    positional — so the kernels stay swappable when the applyInArrow
-    plumbing gap closes."""
-    import os
-
-    from smse_backend_spark.index.build import build_index
-
-    outs = {}
-    for kernel in ("pandas", "arrow"):
-        os.environ["SMSE_BLOCK_KERNEL"] = kernel
-        try:
-            out = str(tmp_path / f"idx_{kernel}")
-            build_index(spark, corpus, out, segment_size=64, n_buckets=4,
-                        block_size=16, n_batches=2, with_positions=True)
-            outs[kernel] = out
-        finally:
-            os.environ.pop("SMSE_BLOCK_KERNEL", None)
-    for sub in ("postings", "docstats", "dictionary"):
-        a = sorted(map(tuple, spark.read.parquet(f"{outs['arrow']}/{sub}").collect()))
-        p = sorted(map(tuple, spark.read.parquet(f"{outs['pandas']}/{sub}").collect()))
-        assert a == p and len(a) > 0, sub
 
 
 def test_block_layout_invariant_to_seg_range_grouping(spark, corpus, tmp_path):
